@@ -2,11 +2,16 @@
 
 Two execution shapes, same semantics:
 
-* **Set-based (the scale path)** — every step is a DataFrame transform:
-  validation filters, anti-join idempotency, node/edge derivation,
-  broadcast code-order join, null-aware patch filter. This is what runs at
-  100 TB: no per-instance loops, no driver-side state; one shuffle for the
-  existing-instance anti-join, zero shuffles for code orders (broadcast).
+* **Set-based (the scale path)** — ``run_import`` in two steps. *Resolve*
+  decides which instances the batch imports with two small driver
+  collects, both bounded by the batch's distinct instance ids: its valid
+  ids, then which of those have an instance record and which already have
+  a committed instance node. *Derive* builds every output (nodes, edges,
+  patches, completion events) as a DataFrame filtered on the literal
+  ``instance_id IN (new ids)``, so no output plan joins against the graph
+  and each sink action evaluates only its own small plan. Code orders are
+  a broadcast join (zero shuffles of the fact side); the remaining
+  shuffles are the per-batch dedups.
 
 * **Batched per-instance (`process_instance_batched`)** — faithful port of
   the reference's chunk loop (handler/incoming_instance_handler.go:140-212):
@@ -59,19 +64,45 @@ def validate_dimensions(dimensions: DataFrame) -> DataFrame:
 # idempotency gate (R9 — handler:305-320)
 # --------------------------------------------------------------------------
 
-def split_new_instances(
-    instances: DataFrame, existing_nodes: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(new, skipped): left-anti join against existing instance nodes —
-    the InstanceExists → skip-without-error contract (test :939-968).
-    At scale both sides hash-partition on instance_id; with a small
-    existing set Catalyst/AQE turns this into a broadcast anti join."""
-    existing_ids = existing_nodes.filter(F.col("node_kind") == "instance").select(
-        "instance_id"
+@dataclass
+class Resolution:
+    """Which instances one batch imports, decided on the driver."""
+
+    valid_events: DataFrame
+    rejected_events: DataFrame
+    new_ids: list[str]
+    skipped_ids: list[str]
+
+
+def resolve(
+    events: DataFrame, instances: DataFrame, existing_nodes: DataFrame
+) -> Resolution:
+    """Split the batch's valid instance ids into new and skipped. An id
+    is imported when it has an instance record and no instance node in
+    ``existing_nodes`` yet, and skipped when it has both — the
+    InstanceExists → skip-without-error contract (test :939-968). Ids
+    without an instance record are neither. Two driver collects, each
+    bounded by the batch: its valid ids, then the instance records and
+    instance nodes of just those ids."""
+    valid_events, rejected = validate_events(events)
+    ids = sorted({r[0] for r in valid_events.select("instance_id").collect()})
+    known, committed = set(), set()
+    if ids:
+        in_batch = F.col("instance_id").isin(ids)
+        records = instances.filter(in_batch).select(
+            "instance_id", F.lit(False).alias("committed")
+        )
+        commits = existing_nodes.filter(
+            in_batch & (F.col("node_kind") == "instance")
+        ).select("instance_id", F.lit(True).alias("committed"))
+        for iid, is_commit in records.unionByName(commits).collect():
+            (committed if is_commit else known).add(iid)
+    return Resolution(
+        valid_events,
+        rejected,
+        new_ids=sorted(known - committed),
+        skipped_ids=sorted(known & committed),
     )
-    new = instances.join(existing_ids, "instance_id", "left_anti")
-    skipped = instances.join(existing_ids, "instance_id", "left_semi")
-    return new, skipped
 
 
 # --------------------------------------------------------------------------
@@ -191,20 +222,13 @@ def build_patch_set(enriched: DataFrame, enable_patch_node_id: bool = True) -> D
     )
 
 
-def completion_events(events: DataFrame, imported_instances: DataFrame) -> DataFrame:
-    """InstanceCompleted per successfully imported instance (R19) — the
-    event echoes the NewInstance fields (event/events.go:10-13)."""
-    return events.join(
-        imported_instances.select("instance_id"), "instance_id", "left_semi"
-    ).select("file_url", "instance_id")
-
-
 # --------------------------------------------------------------------------
 # set-based end-to-end batch
 # --------------------------------------------------------------------------
 
 @dataclass
 class ImportResult:
+    new_ids: list[str]
     instance_nodes: DataFrame
     dimension_nodes: DataFrame
     edges: DataFrame
@@ -212,6 +236,37 @@ class ImportResult:
     completed: DataFrame
     rejected_events: DataFrame
     skipped_instances: DataFrame
+
+
+def derive(
+    resolution: Resolution,
+    instances: DataFrame,
+    dimensions: DataFrame,
+    code_lists: DataFrame,
+    enable_patch_node_id: bool = True,
+) -> ImportResult:
+    """Every output of a resolved batch, each a lazy DataFrame filtered on
+    the literal new-id list. With no new ids every output is empty and
+    needs no Spark job to say so."""
+    is_new = F.col("instance_id").isin(resolution.new_ids)
+    dims = validate_dimensions(dimensions).filter(is_new)
+    enriched = join_code_orders(dims, code_lists)
+    return ImportResult(
+        new_ids=resolution.new_ids,
+        instance_nodes=build_instance_nodes(instances.filter(is_new)),
+        dimension_nodes=build_dimension_nodes(dims),
+        edges=build_edges(dims),
+        patches=build_patch_set(enriched, enable_patch_node_id),
+        # InstanceCompleted per imported instance (R19) — the event echoes
+        # the NewInstance fields (event/events.go:10-13)
+        completed=resolution.valid_events.filter(is_new).select(
+            "file_url", "instance_id"
+        ),
+        rejected_events=resolution.rejected_events,
+        skipped_instances=instances.filter(
+            F.col("instance_id").isin(resolution.skipped_ids)
+        ),
+    )
 
 
 def run_import(
@@ -222,23 +277,15 @@ def run_import(
     existing_nodes: DataFrame,
     enable_patch_node_id: bool = True,
 ) -> ImportResult:
-    """The whole reference handler as one declarative plan. Every output is
-    a lazy DataFrame; sinks decide materialization order."""
-    valid_events, rejected = validate_events(events)
-    wanted = instances.join(valid_events.select("instance_id"), "instance_id", "left_semi")
-    new_instances, skipped = split_new_instances(wanted, existing_nodes)
-    dims = validate_dimensions(dimensions).join(
-        new_instances.select("instance_id"), "instance_id", "left_semi"
-    )
-    enriched = join_code_orders(dims, code_lists)
-    return ImportResult(
-        instance_nodes=build_instance_nodes(new_instances),
-        dimension_nodes=build_dimension_nodes(dims),
-        edges=build_edges(dims),
-        patches=build_patch_set(enriched, enable_patch_node_id),
-        completed=completion_events(valid_events, new_instances),
-        rejected_events=rejected,
-        skipped_instances=skipped,
+    """The whole reference handler: resolve the batch on the driver, then
+    derive its outputs. Every output is a lazy DataFrame; sinks decide
+    materialization order."""
+    return derive(
+        resolve(events, instances, existing_nodes),
+        instances,
+        dimensions,
+        code_lists,
+        enable_patch_node_id,
     )
 
 

@@ -31,32 +31,59 @@ class ParquetGraphStore:
     never match a re-delivered row — eqNullSafe makes the sink idempotent
     standalone, not only behind the importer's upstream gate).
 
-    Scale: a micro-batch carries a bounded set of instance_ids, so the
-    anti-join probe reads ONLY those hive partitions (partition pruning on
-    the isin filter) — per-batch sink work is O(batch instances), not
-    O(accumulated history)."""
+    Cost: ``nodes(ids)``/``edges(ids)`` and the writes' anti-join probe
+    name the given instances' partition directories directly, so Spark
+    lists and reads only those — O(batch instances), not O(accumulated
+    history). ``nodes()``/``edges()`` with no id list read the whole table
+    and so list every partition ever written."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.nodes_dir = os.path.join(base_dir, "nodes")
         self.edges_dir = os.path.join(base_dir, "edges")
 
-    def _read(self, path: str, schema) -> DataFrame:
+    def _partitions(self, path: str, instance_ids) -> list[str]:
+        """The existing partition directories of ``instance_ids``, named
+        the way Spark names them when it writes: special characters are
+        escaped (``a:b/c%`` → ``instance_id=a%3Ab%2Fc%25``) and NULL or ""
+        map to ``__HIVE_DEFAULT_PARTITION__``. A hand-built
+        ``instance_id=<id>`` path would miss such a partition, and the
+        anti-join would re-append its rows on every delivery. Existence
+        is asked of the table's Hadoop file system, so remote stores work
+        as local ones do."""
+        jvm = self.spark._jvm
+        utils = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        hadoop_path = jvm.org.apache.hadoop.fs.Path
+        fs = hadoop_path(path).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        dirs = {
+            os.path.join(path, utils.getPartitionPathString("instance_id", i))
+            for i in instance_ids
+        }
+        return sorted(d for d in dirs if fs.exists(hadoop_path(d)))
+
+    def _scan(self, path: str, schema, dirs: list[str]) -> DataFrame:
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read.schema(schema).option("basePath", path)
+        return reader.parquet(*dirs).select([f.name for f in schema.fields])
+
+    def _read(self, path: str, schema, instance_ids=None) -> DataFrame:
+        if instance_ids is not None:
+            return self._scan(path, schema, self._partitions(path, instance_ids))
         # No pre-walk of the table tree: a directory walk is driver-side
-        # O(files ever written), reintroducing an O(history) component into
-        # a sink whose anti-join is O(batch). Attempt the schema'd read and
-        # treat a missing path as an empty table — an existing-but-empty
-        # dir already yields an empty relation because the schema is
-        # explicit (no file listing needed for inference).
+        # O(files ever written). Attempt the schema'd read and treat a
+        # missing path as an empty table — an existing-but-empty dir
+        # already yields an empty relation because the schema is explicit
+        # (no file listing needed for inference).
         try:
             df = self.spark.read.schema(schema).parquet(path)
             return df.select([f.name for f in schema.fields])
         except AnalysisException as e:
             # ONLY a missing path (no write yet) means "empty store". Any
             # other analysis failure (corrupt/incompatible files, bad path
-            # type, permissions) must stay loud: swallowing it would make
-            # the dedup anti-join see an empty table and silently
-            # re-append every batch as new.
+            # type, permissions) must stay loud: swallowing it would show
+            # an empty graph to every reader, an idempotency gate too,
+            # which would then re-import everything as new.
             cond = None
             for attr in ("getCondition", "getErrorClass"):
                 fn = getattr(e, attr, None)
@@ -71,36 +98,42 @@ class ParquetGraphStore:
                 raise
             return self.spark.createDataFrame([], schema)
 
-    def nodes(self) -> DataFrame:
-        return self._read(self.nodes_dir, NODE_SCHEMA)
+    def nodes(self, instance_ids=None) -> DataFrame:
+        """The node table, or only the nodes of ``instance_ids``."""
+        return self._read(self.nodes_dir, NODE_SCHEMA, instance_ids)
 
-    def edges(self) -> DataFrame:
-        return self._read(self.edges_dir, EDGE_SCHEMA)
+    def edges(self, instance_ids=None) -> DataFrame:
+        """The edge table, or only the edges of ``instance_ids``."""
+        return self._read(self.edges_dir, EDGE_SCHEMA, instance_ids)
 
-    def _fresh(self, batch: DataFrame, path: str, schema, key: list[str]) -> DataFrame:
-        # bounded collect: one row per instance in the micro-batch
-        ids = [r[0] for r in batch.select("instance_id").distinct().collect()]
-        # null-safe pruning: isin uses '=' and never matches NULL, so a
-        # NULL-instance row (written under the hive default partition)
-        # would dodge the probe and re-append forever — include the NULL
-        # partition explicitly when the batch carries one.
-        probe = F.col("instance_id").isin([i for i in ids if i is not None])
-        if any(i is None for i in ids):
-            probe = probe | F.col("instance_id").isNull()
-        existing = self._read(path, schema).filter(probe)
-        cond = [batch[k].eqNullSafe(existing[k]) for k in key]
-        return batch.join(existing, cond, "left_anti")
+    def _append_fresh(self, batch: DataFrame, path: str, schema, key: list[str]) -> None:
+        # The batch is read twice, for its ids and for the write: keep it
+        # in memory rather than recompute its plan and source.
+        batch.persist()
+        try:
+            # bounded collect: one row per instance in the micro-batch
+            ids = [r[0] for r in batch.select("instance_id").distinct().collect()]
+            dirs = self._partitions(path, ids)
+            fresh = batch
+            if dirs:  # only instances already in the table can hold duplicates
+                existing = self._scan(path, schema, dirs)
+                cond = [
+                    batch[k].eqNullSafe(existing[k]) for k in key if k != "instance_id"
+                ]
+                # an instance_id written as "" is read back as NULL
+                stored_id = F.nullif(batch.instance_id, F.lit(""))
+                cond.append(stored_id.eqNullSafe(existing.instance_id))
+                fresh = batch.join(existing, cond, "left_anti")
+            fresh.write.mode("append").partitionBy("instance_id").parquet(path)
+        finally:
+            batch.unpersist()
 
     def write_nodes(self, nodes: DataFrame) -> None:
         key = ["node_kind", "instance_id", "dimension_name", "option"]
-        fresh = self._fresh(nodes, self.nodes_dir, NODE_SCHEMA, key)
-        fresh.write.mode("append").partitionBy("instance_id").parquet(self.nodes_dir)
+        self._append_fresh(nodes, self.nodes_dir, NODE_SCHEMA, key)
 
     def write_edges(self, edges: DataFrame) -> None:
-        fresh = self._fresh(
-            edges, self.edges_dir, EDGE_SCHEMA, list(edges.columns)
-        )
-        fresh.write.mode("append").partitionBy("instance_id").parquet(self.edges_dir)
+        self._append_fresh(edges, self.edges_dir, EDGE_SCHEMA, list(edges.columns))
 
 
 def patch_sink(
