@@ -3049,9 +3049,9 @@ def q65c_drop_column(spark, sf_dir):
 def q86d_mor_delete(spark, sf_dir):
     """DELETE on a live MOR table (r13, r12 verdict #1 — DML on the
     streaming-CDC substrate without compacting first): tombstone rows
-    land as ONE delta group (:func:`storage._delete_where_mor` via
-    ``delete_where_snapshot``), zero base files rewritten. The predicate
-    is judged against the RESOLVED view (a key whose latest delta value
+    land as ONE delta group (the MOR path of
+    :func:`storage.delete_where_snapshot`), zero base files rewritten.
+    The predicate is judged against the RESOLVED view (a key whose latest delta value
     no longer matches is spared). Phase 1 reads post-delete, phase 2
     after MINOR compaction (the fold must carry tombstones still
     masking base rows), phase 3 after MAJOR compaction (tombstones
@@ -3494,9 +3494,9 @@ def q93c_partitioned_mor(spark, sf_dir):
     """,
 )
 def q86f_mor_update(spark, sf_dir):
-    """UPDATE on a live MOR table (r14 — oracling the r13
-    :func:`storage._update_where_mor` verb, completing the q86d/q86e
-    DML row set): matched rows' updated images land as ONE plain upsert
+    """UPDATE on a live MOR table (r14 — oracling the r13 MOR path of
+    :func:`storage.update_where_snapshot`, completing the q86d/q86e DML
+    row set): matched rows' updated images land as ONE plain upsert
     delta group, zero base files rewritten; the predicate and every RHS
     are judged against the RESOLVED view (a row whose latest delta
     value no longer matches is spared; assignments see pre-update

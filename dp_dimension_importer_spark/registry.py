@@ -105,8 +105,10 @@ _REPO_ROOT = _Path(__file__).resolve().parent.parent
 # storage paths re-earn their driver rows, plus the new q90.
 _REPRIORITIZE: list[str] = [
     # r14 changed these riders' shared storage paths AFTER their newest
-    # green rows: upsert_delta_snapshot + the MOR DML verbs route delta
-    # groups through the hive writer (partition tuples on chains),
+    # green rows: upsert_delta_snapshot + the MOR paths of the row-level
+    # DML verb (storage._row_dml, behind delete/update_where_snapshot)
+    # route delta groups through the hive writer (partition tuples on
+    # chains),
     # _commit_delta_group carries partition blocks, delete/update/merge
     # gained MOR partition_where dispatch, merge_into_snapshot gained
     # schema evolution + the delete-admitting rebase, compact_mor routes
@@ -119,12 +121,14 @@ _REPRIORITIZE: list[str] = [
     # first by the no-row rule regardless.
     #
     # r14 second arc additionally changed: the DML verbs' head load +
-    # commit sink (_dml_head/_commit_dml_manifest — branch DML),
+    # commit sink (_dml_head, then _commit_change or _commit_dml_manifest
+    # — branch DML),
     # upsert_delta_snapshot (branch param + same sink),
     # _commit_delta_group (branch routing), fast_forward (txn
     # watermark per-app-max merge — q89b rides it), compact_mor
     # (cluster_by on major), the partition probe prune (now
-    # _partition_keep on the in-hand manifest), and MERGE/MOR-merge
+    # _probe_files/_mor_probe over _partition_keep on the in-hand
+    # manifest), and MERGE/MOR-merge
     # probe pruning consult bloom sidecars when present. Riders below
     # already cover the DML/feed families; q89b joins for the ff
     # change; the r14b-new queries (q68b/q89c/q86g/q86h/q86i) have no

@@ -313,20 +313,16 @@ def optimize_snapshot_incremental(
     DV-carrying new files (their reads need the anti-join; purge
     first)."""
     import glob
-    import json
     import os
     import uuid
 
+    man, head, _ = _dml_head(path, None)
     versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
     if since_version not in versions:
         raise FileNotFoundError(
             f"baseline version {since_version} not committed "
             f"(have {versions}) — vacuumed?"
         )
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
     mapping = man.get("column_mapping") or {}  # cluster logical, write physical
     if man.get("mor"):
         raise ValueError(
@@ -336,15 +332,12 @@ def optimize_snapshot_incremental(
             "chain; optimize_partitions(where, minor=True|False) is "
             "the partition-scoped maintenance verb (r14)"
         )
-    with open(
-        os.path.join(_manifest_dir(path), f"v{since_version}.json")
-    ) as f:
-        base_files = set(json.load(f)["files"])
+    base_files = set(_load_manifest(path, since_version)["files"])
     kept = [rel for rel in man["files"] if rel in base_files]
     new_rels = [rel for rel in man["files"] if rel not in base_files]
     if not new_rels:
         return {
-            "version": versions[-1],
+            "version": head,
             "files_clustered": 0,
             "files_kept": len(kept),
             "files_written": 0,
@@ -367,7 +360,7 @@ def optimize_snapshot_incremental(
         # the added files hold zero rows (an empty append's schema-only
         # part files) — nothing to cluster, nothing worth rewriting
         return {
-            "version": versions[-1],
+            "version": head,
             "files_clustered": 0,
             "files_kept": len(kept),
             "files_written": 0,
@@ -383,33 +376,9 @@ def optimize_snapshot_incremental(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    stats_cols = sorted(
-        set(cols)
-        | {c for per_file in man.get("stats", {}).values() for c in per_file}
-    )
-    stats = {
-        rel: man["stats"][rel]
-        for rel in kept
-        if rel in man.get("stats", {})
-    }
-    stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-    manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=new_rels, new_files=new_files,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_change(
+        path, man, token, removed=new_rels, new_files=new_files,
+        stats_cols=cols,
     )
     return {
         "version": version,
@@ -443,19 +412,13 @@ def compact_small_files_snapshot(
     no commit. Returns ``{"version", "files_compacted", "files_kept",
     "files_written"}``."""
     import glob
-    import json
     import os
     import uuid
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
     # column-mapped tables compact as-is: the raw concat reads and writes
     # PHYSICAL names end-to-end, so the one-physical-schema invariant
     # holds by construction; only the manifest's mapping must carry
-    mapping = man.get("column_mapping") or {}
+    man, head, _ = _dml_head(path, None)
     sizes = {
         rel: os.path.getsize(os.path.join(path, rel))
         for rel in man["files"]
@@ -481,7 +444,7 @@ def compact_small_files_snapshot(
     n_out = -(-est // target) or 1
     if len(small) < 2 or len(small) <= n_out:
         return {
-            "version": versions[-1],
+            "version": head,
             "files_compacted": 0,
             "files_kept": len(man["files"]),
             "files_written": 0,
@@ -505,32 +468,10 @@ def compact_small_files_snapshot(
         os.path.relpath(p, path)
         for p in glob.glob(os.path.join(data_dir, "*.parquet"))
     )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files)
-    if dv_map:  # every DV-carrying file is in kept (excluded from small)
-        manifest["dv"] = dv_map
-    if "mor" in man:
-        # base-file compaction is resolution-neutral (deltas live in the
-        # mor chain, never in "files") — carry the chain verbatim
-        manifest["mor"] = man["mor"]
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=small, new_files=new_files,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    # base-file compaction is resolution-neutral (deltas live in the mor
+    # chain, never in "files"): the change set carries the chain verbatim
+    version = _commit_change(
+        path, man, token, removed=small, new_files=new_files
     )
     return {
         "version": version,
@@ -1127,6 +1068,27 @@ def _dml_head(path: str, branch: str | None):
     return man, head, head + 1
 
 
+#: table contracts every commit inherits from its parent manifest unless
+#: it sets the key itself (an explicit empty value clears it)
+_INHERITED = ("constraints", "generated", "widened", "dropped")
+
+
+def _inherit_contracts(manifest: dict, prev: dict) -> dict:
+    """The one inherit rule for main AND branch commits: a verb that
+    rebuilt its manifest without thinking about CHECK constraints,
+    generated columns or the widened/dropped file-reality markers keeps
+    ``prev``'s; only an explicit key (add/drop, an overwrite's empty
+    markers) replaces them. Rows those verbs write are rearrangements of
+    already-validated data, and narrow/tombstoned bytes stay on disk."""
+    return {
+        **manifest,
+        **{
+            k: prev[k] for k in _INHERITED
+            if k not in manifest and prev.get(k)
+        },
+    }
+
+
 def _commit_branch_manifest(
     path: str, name: str, manifest: dict, token: str, bv: int
 ) -> int:
@@ -1134,11 +1096,15 @@ def _commit_branch_manifest(
     write_snapshot_to_branch protocol minus its renumber-retry): a DML
     manifest is a read-modify-write derivation of the branch head, so
     losing the claim means the head moved and the derivation is stale —
-    refuse, never renumber."""
+    refuse, never renumber. The manifest inherits the branch head's
+    contracts (:func:`_inherit_contracts`), as a main commit does."""
     import json
     import os
 
     bdir = _branch_dir(path, name)
+    manifest = _inherit_contracts(
+        manifest, _branch_head_manifest(path, name)
+    )
     tmp = os.path.join(bdir, f".tmp-{token}.json")
     with open(tmp, "w") as f:
         json.dump(manifest, f)
@@ -1246,24 +1212,7 @@ def _commit_manifest(path, manifest, token, rebase=None) -> int:
                 if k not in ("version", "committed_at")
             }
             pending_rebase = False
-        # CHECK constraints ride every commit: a verb that rebuilt the
-        # manifest without thinking about them (optimize, compaction,
-        # restore) INHERITS the previous version's map; only an explicit
-        # "constraints" key (add/drop) replaces it. Rows those verbs
-        # write are rearrangements of already-validated data.
-        if "constraints" not in manifest and prev_man.get("constraints"):
-            manifest = {
-                **manifest, "constraints": prev_man["constraints"]
-            }
-        if "generated" not in manifest and prev_man.get("generated"):
-            manifest = {**manifest, "generated": prev_man["generated"]}
-        # widened/dropped describe FILE reality (narrow/extra bytes still
-        # on disk): rewrite commits that didn't think about them must
-        # keep forcing the read schema; overwrite-shaped verbs clear
-        # them EXPLICITLY (empty overrides inherit)
-        for carry in ("widened", "dropped"):
-            if carry not in manifest and prev_man.get(carry):
-                manifest = {**manifest, carry: prev_man[carry]}
+        manifest = _inherit_contracts(manifest, prev_man)
         with open(tmp, "w") as f:
             json.dump(
                 {
@@ -1955,7 +1904,9 @@ def _scan_with_pos(
     join, never to a driver-side bitmap. ``mapping`` (logical->physical,
     the manifest's column_mapping) renames the scanned columns to their
     LOGICAL names so DML predicates/assignments speak the reader's
-    vocabulary; the returned columns are then logical too."""
+    vocabulary; the returned columns are then logical too. Used by the
+    row-level DML probe and rewrite (:func:`_row_dml`), MERGE, purge,
+    partition-scoped OPTIMIZE and the DV-aware snapshot reads."""
     import os
 
     from pyspark.sql import functions as F
@@ -2004,44 +1955,84 @@ def _scan_with_pos(
     return data, cols
 
 
-
-def _new_stats_of(manifest: dict, new_files) -> dict | None:
-    if "stats" not in manifest:
-        return None
-    return {
-        rel: manifest["stats"][rel]
-        for rel in new_files
-        if rel in manifest["stats"]
-    }
-
-def _make_dml_rebase(
-    base_man: dict,
+def _commit_change(
+    path: str,
+    base: dict,
+    token: str,
+    *,
     removed=(),
     dv_set: dict | None = None,
     new_files=(),
     new_values: dict | None = None,
-    new_stats: dict | None = None,
-    mapping: dict | None = None,
-):
-    """Optimistic-concurrency rebase for SUBSET-REPLACING commits (r12 —
-    Iceberg's snapshot-isolation validation for row-level DML): a COW
-    delete/update, DV delete/update, purge, compaction or incremental/
-    partition-scoped optimize replaces ``removed`` files (and/or
-    attaches ``dv_set`` sidecars) with ``new_files``. If a racing commit
-    did NOT touch exactly those files — they are still referenced by the
-    new head with unchanged DV state — and no table contract moved, the
-    two commits are disjoint and BOTH succeed: the loser rebuilds its
-    manifest on the head (racing append+delete, or two deletes on
-    different files, no longer hard-fail). A shared file, a DV added by
-    the competitor on a file we rewrote/masked, a schema/constraint/
-    mapping/spec-relevant change, or a vanished file refuses with
+    stats_cols=None,
+    branch: str | None = None,
+    expect_bv: int | None = None,
+) -> int:
+    """Commit one CHANGE SET derived from ``base`` — the single commit of
+    every subset-replacing verb (row-level DELETE/UPDATE in CoW and DV
+    mode, purge, small-file compaction, incremental and partition-scoped
+    OPTIMIZE). The change set: ``removed`` files leave, ``dv_set``
+    (``{rel: sidecar}``) attaches deletion vectors, ``new_files`` join
+    with partition tuples from ``new_values`` (None = never pruned) and
+    footer stats for ``stats_cols`` plus every column ``base`` already
+    records. Everything else — schema, mapping, DVs and stats of
+    surviving files, the MOR chain, txn watermarks — carries.
+
+    The committed manifest is the change applied to ``base``. On a lost
+    main race the SAME change applies to the racing head (Iceberg's
+    snapshot-isolation validation for row-level DML): if the competitor
+    did NOT touch our files — still referenced by the head with
+    unchanged DV state — and no table contract moved, the two commits
+    are disjoint and BOTH succeed (racing append+delete, or two deletes
+    on different files). A shared file, a DV the competitor added on a
+    file we rewrite/mask, a schema/constraint/mapping change, a table
+    turned MOR, or a vanished file refuses with
     :class:`ConcurrentCommitError` — the verb re-runs against the new
-    head. MERGE deliberately has NO rebase: its NOT-MATCHED inserts
-    assumed keys absent from the WHOLE table, and a concurrent append
-    could invalidate that (the write-skew serializable-vs-snapshot
-    distinction)."""
-    touched = set(removed) | set(dv_set or {})
-    base_dv = base_man.get("dv") or {}
+    head. MERGE deliberately does not commit here: its NOT-MATCHED
+    inserts assumed keys absent from the WHOLE table, and a concurrent
+    append could invalidate that (write skew). Branch commits claim
+    ``expect_bv`` exactly (no rebase)."""
+    mapping = base.get("column_mapping") or {}
+    new_stats = None
+    if stats_cols is not None or "stats" in base:
+        cols = set(stats_cols or ()) | {
+            c for per in (base.get("stats") or {}).values() for c in per
+        }
+        new_stats = _stats_logical(
+            list(new_files), path, sorted(cols), mapping
+        )
+    rm = set(removed)
+    touched = rm | set(dv_set or {})
+    base_dv = base.get("dv") or {}
+
+    def _apply(head: dict) -> dict:
+        files = [f for f in head.get("files") or [] if f not in rm]
+        files += list(new_files)
+        m = {
+            "files": files,
+            "schema": head.get("schema") or base.get("schema"),
+        }
+        if mapping:
+            m["column_mapping"] = mapping
+        dv = {
+            rel: d for rel, d in (head.get("dv") or {}).items()
+            if rel not in rm
+        }
+        dv.update(dv_set or {})
+        if dv:
+            m["dv"] = dv
+        _carry_partition(head, m, list(new_files), new_values)
+        if "stats" in head or new_stats is not None:
+            keep = set(files)
+            m["stats"] = {
+                rel: v for rel, v in (head.get("stats") or {}).items()
+                if rel in keep
+            }
+            m["stats"].update(new_stats or {})
+        for carry in ("mor", "txn"):
+            if carry in head:
+                m[carry] = head[carry]
+        return m
 
     def _rebase(head: dict) -> dict:
         if head.get("mor"):
@@ -2050,7 +2041,7 @@ def _make_dml_rebase(
             )
         for key in ("constraints", "generated", "column_mapping",
                     "widened", "dropped", "schema"):
-            if (head.get(key) or None) != (base_man.get(key) or None):
+            if (head.get(key) or None) != (base.get(key) or None):
                 raise ConcurrentCommitError(
                     f"table {key} changed concurrently — this commit "
                     "was derived under the old contract; re-run"
@@ -2069,33 +2060,11 @@ def _make_dml_rebase(
                     "vector — masking/rewriting it now would drop those "
                     "deletes; re-run the verb"
                 )
-        rm = set(removed)
-        files = [f for f in (head.get("files") or []) if f not in rm]
-        files += list(new_files)
-        m2 = {"files": files, "schema": head.get("schema")
-              or base_man.get("schema")}
-        if mapping:
-            m2["column_mapping"] = mapping
-        dv = {
-            rel: d for rel, d in head_dv.items() if rel not in rm
-        }
-        dv.update(dv_set or {})
-        if dv:
-            m2["dv"] = dv
-        _carry_partition(head, m2, list(new_files), new_values)
-        keep = set(files)
-        if head.get("stats") or new_stats:
-            m2["stats"] = {
-                rel: v
-                for rel, v in (head.get("stats") or {}).items()
-                if rel in keep
-            }
-            m2["stats"].update(new_stats or {})
-        if head.get("txn"):
-            m2["txn"] = head["txn"]
-        return m2
+        return _apply(head)
 
-    return _rebase
+    return _commit_dml_manifest(
+        path, _apply(base), token, branch, expect_bv, rebase=_rebase
+    )
 
 
 def _write_dv_sidecars(
@@ -2164,6 +2133,300 @@ def _write_dv_sidecars(
     )
 
 
+def _probe_files(
+    spark: SparkSession, path: str, man: dict, prune: tuple | None,
+    partition_where: dict | None, point: tuple | None,
+) -> list[str]:
+    """The files a row-level DML on a file table must probe. Each prune
+    is a CALLER CONTRACT — the predicate can only be TRUE inside it — so
+    every other file carries into the new version without entering the
+    probe scan at all (zero footer reads):
+
+    * ``partition_where``: only files whose partition tuple matches (a
+      one-day delete on a hidden-partitioned table probes one day);
+    * ``prune=(col, lo, hi)``: only files whose recorded [min, max] of
+      ``col`` intersects the range (the ``read_snapshot_pruned`` rule);
+    * ``point=(col, values)``: only files whose bloom sidecar admits a
+      value — ``prune``'s membership twin for hash-ordered keys.
+
+    Files without a tuple, stats or index always probe (conservative)."""
+    rels = list(man["files"])
+    if partition_where is not None and man.get("partition"):
+        ks = set(
+            _partition_keep(
+                man["partition"], man["files"], partition_where, spark
+            )
+        )
+        rels = [rel for rel in rels if rel in ks]
+    if prune is not None:
+        col, lo, hi = prune
+        stats = man.get("stats", {})
+        elo, ehi = _stat_encode(lo), _stat_encode(hi)
+        rels = [
+            rel for rel in rels
+            if (s_ := stats.get(rel, {}).get(col)) is None
+            or not (s_[1] < elo or s_[0] > ehi)
+        ]
+    if point is not None:
+        rels = _bloom_point_keep(
+            spark, path, man, point[0], list(point[1]), rels
+        )
+    return rels
+
+
+def _mor_probe(
+    spark: SparkSession, path: str, man: dict, prune: tuple | None,
+    partition_where: dict | None, point: tuple | None, verb: str,
+) -> tuple[dict, int]:
+    """The MOR twin of :func:`_probe_files`: prune the base files AND the
+    delta chain under the same caller contracts; returns (manifest to
+    resolve, files probed). ``prune`` and ``point`` are sound only on a
+    MOR key column — a key's every commit then lives in the surviving
+    files, so the latest-wins winner over them is the true winner;
+    non-key stats could let a superseded row resurrect."""
+    mor = man["mor"]
+    read_man = man
+    n_kept = len(man["files"]) + sum(len(g) for g in mor["deltas"])
+    if partition_where is not None:
+        read_man, n_kept, _ = _mor_tuple_pruned_manifest(
+            read_man, partition_where, spark
+        )
+    if prune is not None:
+        col, lo, hi = prune
+        if col not in mor["key_cols"]:
+            raise ValueError(
+                f"MOR {verb} prune column {col!r} must be a MOR key "
+                f"column {mor['key_cols']} — non-key stats can't prune a "
+                "chain soundly (a superseded row would resurrect as "
+                "winner)"
+            )
+        read_man, n_kept, _ = _mor_pruned_manifest(
+            read_man, {col: (lo, hi)}
+        )
+    if point is not None:
+        read_man, n_kept, _ = _mor_bloom_point_pruned(
+            spark, path, read_man, point[0], list(point[1])
+        )
+    return read_man, n_kept
+
+
+def _assign(
+    df: DataFrame, cols: list[str], assignments: dict, man: dict,
+    hit=None,
+) -> DataFrame:
+    """UPDATE's one projection: every RHS sees the PRE-update values (one
+    select over the original columns, so ``{"a": "b", "b": "a"}`` swaps),
+    each new value is cast to the column's committed type, then generated
+    columns are computed/validated and CHECK constraints enforced on the
+    rows about to be written. ``hit`` (a Column) limits the assignment to
+    matching rows; None assigns every row of ``df``."""
+    from pyspark.sql import functions as F
+
+    schema = man["schema"]
+    proj = []
+    for c in cols:
+        if c in assignments:
+            v = assignments[c]
+            v = (F.expr(v) if isinstance(v, str) else v).cast(schema[c])
+            if hit is not None:
+                v = F.when(hit, v).otherwise(F.col(c))
+            proj.append(v.alias(c))
+        else:
+            proj.append(F.col(c))
+    out = df.select(*proj)
+    if man.get("generated"):
+        out = _apply_generated(
+            out, man["generated"], schema, "update_where_snapshot"
+        )
+    if man.get("constraints"):
+        _enforce_constraints(
+            out, man["constraints"], "update_where_snapshot"
+        )
+    return out
+
+
+def _row_dml(
+    spark: SparkSession, path: str, assignments: dict | None, predicate,
+    compression: str, prune: tuple | None, mode: str,
+    partition_where: dict | None, point: tuple | None,
+    branch: str | None,
+) -> dict:
+    """The row-level DML verb behind :func:`delete_where_snapshot` and
+    :func:`update_where_snapshot`. A DELETE (``assignments is None``) is
+    the UPDATE that writes no new image of a matched row. One probe, one
+    rewrite, one commit per write strategy:
+
+    * CoW — one DV-aware probe scan aggregates matches to their files;
+      only those files rewrite (survivors, or every row with the
+      assignment applied to matches) and commit through
+      :func:`_commit_change` replacing them;
+    * DV — matched positions land in deletion-vector sidecars and, for
+      an UPDATE, the matched rows' new images append as new files;
+    * MOR — the predicate is judged against the RESOLVED view and one
+      delta group lands: tombstones (key, seq, op='D') for a DELETE,
+      full images for an UPDATE; zero base files rewritten. Reference:
+      the importer's long-lived upsert loop
+      (handler/incoming_instance_handler.go:285-303) must accept deletes
+      and updates.
+
+    Nothing matched → nothing committed, ``version`` is the head."""
+    import os
+    import shutil
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    delete = assignments is None
+    verb = "delete" if delete else "update"
+    if mode not in ("cow", "dv"):
+        raise ValueError(f"unknown {verb} mode {mode!r}")
+    man, head_id, expect_bv = _dml_head(path, branch)
+    schema, mor = man["schema"], man.get("mor")
+    if mor:
+        if not delete and mor.get("merge") in ("partial", "aggregate"):
+            raise ValueError(
+                "UPDATE on a partial/aggregate-merge MOR table is not "
+                "supported: a full image whose NULL genuinely means NULL "
+                "would read back as 'keep prior value' and resurrect "
+                "older data — send partial upserts (and tombstone "
+                "deletes), or compact_mor (major) to materialize first"
+            )
+        _check_reserved(schema, (MOR_OP_COL,))
+    if not delete:
+        missing = [c for c in assignments if c not in schema]
+        if missing:
+            raise ValueError(
+                f"UPDATE cannot assign non-existent columns {missing} — "
+                "new columns arrive via a write commit (schema "
+                "evolution), not UPDATE"
+            )
+
+    def result(version=head_id, rows=0, probed=0, rewritten=0, written=0):
+        out = {
+            "version": version,
+            "rows_deleted" if delete else "rows_updated": rows,
+            "files_rewritten": rewritten,
+            "files_kept": len(man["files"]) - rewritten,
+            "files_probed": probed,
+        }
+        if mor:
+            out["delta_files_written"] = written
+        elif delete or mode == "dv":
+            out["dv_files_written"] = written
+        return out
+
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    hit = F.coalesce(pred, F.lit(False))  # NULL predicate = no match
+    token = uuid.uuid4().hex[:12]
+    if mor:
+        read_man, n_probed = _mor_probe(
+            spark, path, man, prune, partition_where, point, verb
+        )
+        if not read_man["files"] and not any(read_man["mor"]["deltas"]):
+            return result(probed=n_probed)
+        matched = _resolve_mor(spark, path, read_man).filter(hit)
+        if delete:
+            rows = matched.select(
+                *mor["key_cols"], F.col(mor["seq_col"]),
+                F.lit(MOR_DELETE_OP).alias(MOR_OP_COL),
+            )
+        else:
+            rows = _assign(matched, list(schema), assignments, man)
+        # routed write: real partition tuples on a hidden-partitioned
+        # MOR table (mapping applied physically inside)
+        new_files, new_values = _write_delta_group_routed(
+            rows, path, man, token, compression
+        )
+        if not new_files:
+            shutil.rmtree(os.path.join(path, "data", token),
+                          ignore_errors=True)
+            return result(probed=n_probed)
+        import pyarrow.parquet as pq
+
+        n_rows = sum(
+            pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
+            for rel in new_files
+        )
+        version = _commit_delta_group(
+            path, man, new_files, token, new_values=new_values,
+            branch=branch, expect_bv=expect_bv,
+        )
+        return result(version, n_rows, n_probed, written=len(new_files))
+
+    # column-mapped tables: scan logical (predicate and assignments speak
+    # logical names), write physical — a rename stays metadata-only
+    # through DML (Delta column-mapping parity)
+    mapping = man.get("column_mapping") or {}
+    dv_map = man.get("dv") or {}
+    probe_rels = _probe_files(spark, path, man, prune, partition_where, point)
+    if not probe_rels:  # pruning proves no file can hold a matching row
+        return result()
+    data, cols = _scan_with_pos(
+        spark, path, probe_rels, dv_map, mapping, _phys_schema(man)
+    )
+    if mode == "dv":
+        matched = data.filter(pred)
+        summary = _write_dv_sidecars(
+            matched.select("_fname", "_pos"), path, token, probe_rels,
+            dv_map,
+        )
+        if not summary:
+            shutil.rmtree(os.path.join(path, "data", token),
+                          ignore_errors=True)
+            return result(probed=len(probe_rels))
+        new_files, new_values = [], None
+        if not delete:
+            # the matched rows' UPDATED images append as new files (one
+            # hive-routed write — real tuples on partitioned tables)
+            new_files, new_values = _route_rewrite(
+                _assign(matched, cols, assignments, man), path, man,
+                token + "u", compression, mapping,
+            )
+        rel_of = {os.path.basename(rel): rel for rel in man["files"]}
+        version = _commit_change(
+            path, man, token,
+            dv_set={rel_of[r["fname"]]: r["dv_rel"] for r in summary},
+            new_files=new_files, new_values=new_values,
+            branch=branch, expect_bv=expect_bv,
+        )
+        return result(
+            version, sum(r["n_new"] for r in summary), len(probe_rels),
+            written=len(summary),
+        )
+
+    hits = (
+        data.filter(pred)
+        .groupBy("_fname")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    touched = {r["_fname"]: r["n"] for r in hits}
+    if not touched:
+        return result(probed=len(probe_rels))
+    doomed = [rel for rel in probe_rels if os.path.basename(rel) in touched]
+    # rewrite through the DV-aware scan: a CoW rewrite of a DV-carrying
+    # file MATERIALIZES its existing deletes too (the vector dies with
+    # the file it describes)
+    sdata, scols = _scan_with_pos(
+        spark, path, doomed, dv_map, mapping, _phys_schema(man)
+    )
+    if delete:
+        rows = sdata.filter(~hit).select(*scols)
+    else:
+        rows = _assign(sdata, scols, assignments, man, hit)
+    new_files, new_values = _route_rewrite(
+        rows, path, man, token, compression, mapping
+    )
+    version = _commit_change(
+        path, man, token, removed=doomed, new_files=new_files,
+        new_values=new_values, branch=branch, expect_bv=expect_bv,
+    )
+    return result(
+        version, sum(touched.values()), len(probe_rels),
+        rewritten=len(doomed),
+    )
+
+
 def delete_where_snapshot(
     spark: SparkSession,
     path: str,
@@ -2228,217 +2491,22 @@ def delete_where_snapshot(
     delete against a branch head instead of main; the result lands as
     the next branch commit (``version`` is then the branch-local
     number), main is untouched until :func:`fast_forward`, and a racing
-    branch writer refuses (single-claim). MOR tables refuse on a
-    branch (delta-chain commits are main-only).
+    branch writer refuses (single-claim).
+
+    On a MOR table (either ``mode``) the matched keys land as ONE delta
+    group of tombstones judged against the resolved view — zero base
+    files rewritten, on a branch the group stages on the branch chain.
 
     Returns ``{"version", "rows_deleted", "files_rewritten",
     "files_kept", "files_probed", "dv_files_written"}`` (``version`` is
     the pre-existing latest when the delete was a no-op;
-    ``files_probed`` counts the files the match scan actually read)."""
-    import glob
-    import json
-    import os
-    import uuid
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unknown delete mode {mode!r}")
-    man, head_id, expect_bv = _dml_head(path, branch)
-    # column-mapped tables: scan logical (predicate speaks logical
-    # names), write physical — rename stays metadata-only through DML
-    # (r11 verdict #1, Delta column-mapping parity)
-    mapping = man.get("column_mapping") or {}
-    if man.get("mor"):
-        # MOR tables take the delta-tombstone path regardless of mode
-        # (r13): file-level COW probes would see superseded base rows,
-        # and DVs can't mix with a delta chain — tombstones are the
-        # merge-on-read-native delete (zero base files touched).
-        # r14: ``branch`` stages the tombstone group as the next BRANCH
-        # commit — the chain grows on the branch manifest only
-        return _delete_where_mor(
-            spark, path, man, predicate, compression, prune,
-            partition_where, point, branch, head_id, expect_bv,
-        )
-    dv_map = man.get("dv") or {}
-    probe_rels = list(man["files"])
-    if partition_where is not None:
-        # r13: partition-tuple probe pruning — on a hidden-partitioned
-        # table a DML whose predicate is confined to some partitions
-        # (caller contract, same as `prune`) probes ONLY their files;
-        # no-tuple files are always probed (conservative). At 100 TB a
-        # one-day delete probes one day, not the table.
-        keep = (
-            _partition_keep(
-                man["partition"], man["files"], partition_where, spark
-            )
-            if man.get("partition") else list(man["files"])
-        )
-        ks = set(keep)
-        probe_rels = [rel for rel in probe_rels if rel in ks]
-    if prune is not None:
-        col, lo, hi = prune
-        stats = man.get("stats", {})
-        elo, ehi = _stat_encode(lo), _stat_encode(hi)
-        probe_rels = [
-            rel for rel in probe_rels
-            if (s_ := stats.get(rel, {}).get(col)) is None
-            or not (s_[1] < elo or s_[0] > ehi)
-        ]
-    if point is not None:
-        # r14: bloom point prune — `prune`'s membership twin for keys
-        # where range stats prune nothing (hash-ordered ids). Caller
-        # contract mirrors `prune`: the predicate can only be TRUE for
-        # rows with ``col IN values``; indexed files whose filter
-        # rejects every value carry without entering the probe scan,
-        # unindexed files always probe (index_bloom_snapshot refreshes).
-        probe_rels = _bloom_point_keep(
-            spark, path, man, point[0], list(point[1]), probe_rels
-        )
-    if (
-        prune is not None
-        or partition_where is not None
-        or point is not None
-    ):
-        if not probe_rels:  # pruning proves no file can hold a doomed row
-            return {
-                "version": head_id,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_kept": len(man["files"]),
-                "files_probed": 0,
-                "dv_files_written": 0,
-            }
-    data, _cols = _scan_with_pos(
-        spark, path, probe_rels, dv_map, mapping, _phys_schema(man)
+    ``files_probed`` counts the files the match scan actually read; a
+    MOR table reports ``delta_files_written`` instead of
+    ``dv_files_written``)."""
+    return _row_dml(
+        spark, path, None, predicate, compression, prune, mode,
+        partition_where, point, branch,
     )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-    if mode == "dv":
-        token = uuid.uuid4().hex[:12]
-        summary = _write_dv_sidecars(
-            data.filter(pred).select("_fname", "_pos"),
-            path, token, probe_rels, dv_map,
-        )
-        if not summary:
-            data_dir = os.path.join(path, "data", token)
-            os.rmdir(data_dir)
-            return {
-                "version": head_id,
-                "rows_deleted": 0,
-                "files_rewritten": 0,
-                "files_kept": len(man["files"]),
-                "files_probed": len(probe_rels),
-                "dv_files_written": 0,
-            }
-        rel_of_fname = {os.path.basename(rel): rel for rel in man["files"]}
-        new_dv = dict(dv_map)
-        rows_deleted = 0
-        for r in summary:
-            new_dv[rel_of_fname[r["fname"]]] = r["dv_rel"]
-            rows_deleted += r["n_new"]
-        manifest = {
-            "files": man["files"],
-            "schema": man["schema"],
-            "dv": new_dv,
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        _carry_partition(man, manifest, new_files=())
-        if "txn" in man:
-            manifest["txn"] = man["txn"]
-        if "stats" in man:
-            manifest["stats"] = man["stats"]  # now upper bounds: still
-            # conservative-correct for pruning
-        version = _commit_dml_manifest(
-            path, manifest, token, branch, expect_bv,
-            rebase=_make_dml_rebase(
-                man,
-                dv_set={
-                    rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary
-                },
-                mapping=mapping,
-            ),
-        )
-        return {
-            "version": version,
-            "rows_deleted": rows_deleted,
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": len(summary),
-        }
-
-    hits = (
-        data.filter(pred)
-        .groupBy("_fname")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {r["_fname"]: r["n"] for r in hits}
-    rows_deleted = sum(touched.values())
-    if not touched:
-        return {
-            "version": head_id,
-            "rows_deleted": 0,
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": 0,
-        }
-    kept = [
-        rel for rel in man["files"] if os.path.basename(rel) not in touched
-    ]
-    doomed_rels = [
-        rel for rel in probe_rels if os.path.basename(rel) in touched
-    ]
-
-    token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, "data", token)
-    # survivors through the DV-aware scan: a COW rewrite of a DV-carrying
-    # file MATERIALIZES its existing deletes too (the vector dies with
-    # the file it describes)
-    sdata, scols = _scan_with_pos(
-        spark, path, doomed_rels, dv_map, mapping, _phys_schema(man)
-    )
-    survivors = sdata.filter(~F.coalesce(pred, F.lit(False))).select(*scols)
-    new_files, new_values = _route_rewrite(
-        survivors, path, man, token, compression, mapping
-    )
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]  # idempotence watermarks never regress
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_dml_manifest(
-        path, manifest, token, branch, expect_bv,
-        rebase=_make_dml_rebase(
-            man, removed=doomed_rels, new_files=new_files,
-            new_values=new_values, new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
-    )
-    return {
-        "version": version,
-        "rows_deleted": rows_deleted,
-        "files_rewritten": len(doomed_rels),
-        "files_kept": len(kept),
-        "files_probed": len(probe_rels),
-        "dv_files_written": 0,
-    }
 
 
 def _source_key_profile(
@@ -2991,247 +3059,19 @@ def update_where_snapshot(
 
     Guard rails: an assigned column must already exist (UPDATE never
     adds columns — that's schema evolution via a write), its committed
-    type is preserved by casting the new value to it, and MOR tables
-    refuse (compact first) for the same probe-soundness reason as
-    DELETE. ``branch`` (r14): stage the update on a branch head (the
-    delete verb's write-audit-publish contract — branch-local commit
-    number returned, main untouched until fast_forward). Returns
-    ``{"version", "rows_updated", "files_rewritten",
-    "files_kept", "files_probed"}`` (plus ``"dv_files_written"`` in DV
-    mode)."""
-    import glob
-    import json
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    if mode not in ("cow", "dv"):
-        raise ValueError(f"unknown update mode {mode!r}")
-    man, head_id, expect_bv = _dml_head(path, branch)
-    mapping = man.get("column_mapping") or {}  # scan logical, write physical
-    if man.get("mor"):
-        # r13: updated images land as one plain upsert delta group —
-        # zero base rewrites, the merge-on-read-native UPDATE
-        # (r14: ``branch`` stages the group on the branch chain)
-        return _update_where_mor(
-            spark, path, man, assignments, predicate, compression, prune,
-            partition_where, point, branch, head_id, expect_bv,
-        )
-    schema = man["schema"]
-    missing = [c for c in assignments if c not in schema]
-    if missing:
-        raise ValueError(
-            f"UPDATE cannot assign non-existent columns {missing} — new "
-            "columns arrive via a write commit (schema evolution), not "
-            "UPDATE"
-        )
-    dv_map = man.get("dv") or {}
-    probe_rels = list(man["files"])
-    if partition_where is not None:
-        # r13: partition-tuple probe pruning (see delete's note) — the
-        # caller guarantees the predicate is FALSE outside the matching
-        # partitions; their files carry without entering the probe scan
-        keep = (
-            _partition_keep(
-                man["partition"], man["files"], partition_where, spark
-            )
-            if man.get("partition") else list(man["files"])
-        )
-        ks = set(keep)
-        probe_rels = [rel for rel in probe_rels if rel in ks]
-    if prune is not None:
-        col, lo, hi = prune
-        stats = man.get("stats", {})
-        elo, ehi = _stat_encode(lo), _stat_encode(hi)
-        probe_rels = [
-            rel for rel in probe_rels
-            if (s_ := stats.get(rel, {}).get(col)) is None
-            or not (s_[1] < elo or s_[0] > ehi)
-        ]
-    if point is not None:
-        # r14: bloom point prune (see delete's note — same caller
-        # contract: the predicate is FALSE outside ``col IN values``)
-        probe_rels = _bloom_point_keep(
-            spark, path, man, point[0], list(point[1]), probe_rels
-        )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    no_op = {
-        "version": head_id,
-        "rows_updated": 0,
-        "files_rewritten": 0,
-        "files_kept": len(man["files"]),
-        "files_probed": len(probe_rels),
-    }
-    if not probe_rels:  # stats prove no file can hold a matching row
-        return no_op
-    data, _cols = _scan_with_pos(
-        spark, path, probe_rels, dv_map, mapping, _phys_schema(man)
+    type is preserved by casting the new value to it, and on a MOR
+    table the matched rows' updated images land as ONE upsert delta
+    group (partial/aggregate-merge MOR tables refuse). ``branch`` (r14):
+    stage the update on a branch head (the delete verb's
+    write-audit-publish contract — branch-local commit number returned,
+    main untouched until fast_forward). Returns ``{"version",
+    "rows_updated", "files_rewritten", "files_kept", "files_probed"}``
+    (plus ``"dv_files_written"`` in DV mode, ``"delta_files_written"``
+    on a MOR table)."""
+    return _row_dml(
+        spark, path, assignments, predicate, compression, prune, mode,
+        partition_where, point, branch,
     )
-
-    if mode == "dv":
-        import shutil as _sh
-
-        token = uuid.uuid4().hex[:12]
-        matched = data.filter(F.coalesce(pred, F.lit(False)))
-        summary = _write_dv_sidecars(
-            matched.select("_fname", "_pos"),
-            path, token, probe_rels, dv_map,
-        )
-        if not summary:
-            _sh.rmtree(os.path.join(path, "data", token),
-                       ignore_errors=True)
-            return {**no_op, "dv_files_written": 0}
-        # the matched rows' UPDATED images append as new files (one
-        # hive-routed write — real tuples on partitioned tables); the
-        # RHS sees pre-update values as in COW mode
-        dcols = [c for c in data.columns if c not in ("_fname", "_pos")]
-        proj_dv = []
-        for c in dcols:
-            if c in assignments:
-                v = assignments[c]
-                v = F.expr(v) if isinstance(v, str) else v
-                proj_dv.append(v.cast(schema[c]).alias(c))
-            else:
-                proj_dv.append(F.col(c))
-        updated_rows = matched.select(*proj_dv)
-        if man.get("generated"):
-            updated_rows = _apply_generated(
-                updated_rows, man["generated"], schema,
-                "update_where_snapshot",
-            )
-        if man.get("constraints"):
-            _enforce_constraints(
-                updated_rows, man["constraints"], "update_where_snapshot"
-            )
-        new_files, new_values = _route_rewrite(
-            updated_rows, path, man, token + "u", compression, mapping
-        )
-        rel_of_fname = {
-            os.path.basename(rel): rel for rel in man["files"]
-        }
-        new_dv = dict(dv_map)
-        rows_updated = 0
-        for r in summary:
-            new_dv[rel_of_fname[r["fname"]]] = r["dv_rel"]
-            rows_updated += r["n_new"]
-        manifest = {
-            "files": man["files"] + new_files,
-            "schema": schema,
-            "dv": new_dv,
-        }
-        if mapping:
-            manifest["column_mapping"] = mapping
-        _carry_partition(man, manifest, new_files, new_values)
-        if "txn" in man:
-            manifest["txn"] = man["txn"]
-        if "stats" in man:
-            stats_cols = sorted(
-                {c for per in man["stats"].values() for c in per}
-            )
-            # old files' stats become upper bounds under their DVs —
-            # still conservative-correct for pruning
-            st = dict(man["stats"])
-            st.update(
-                _stats_logical(new_files, path, stats_cols, mapping)
-            )
-            manifest["stats"] = st
-        version = _commit_dml_manifest(
-            path, manifest, token, branch, expect_bv,
-            rebase=_make_dml_rebase(
-                man,
-                dv_set={
-                    rel_of_fname[r["fname"]]: r["dv_rel"] for r in summary
-                },
-                new_files=new_files, new_values=new_values,
-                new_stats=_new_stats_of(manifest, new_files),
-                mapping=mapping,
-            ),
-        )
-        return {
-            "version": version,
-            "rows_updated": rows_updated,
-            "files_rewritten": 0,
-            "files_kept": len(man["files"]),
-            "files_probed": len(probe_rels),
-            "dv_files_written": len(summary),
-        }
-
-    hits = (
-        data.filter(pred)
-        .groupBy("_fname")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    touched = {r["_fname"]: r["n"] for r in hits}
-    if not touched:
-        return no_op
-    rows_updated = sum(touched.values())
-    kept = [
-        rel for rel in man["files"] if os.path.basename(rel) not in touched
-    ]
-    touched_rels = [
-        rel for rel in probe_rels if os.path.basename(rel) in touched
-    ]
-    token = uuid.uuid4().hex[:12]
-    sdata, scols = _scan_with_pos(
-        spark, path, touched_rels, dv_map, mapping, _phys_schema(man)
-    )
-    hit = F.coalesce(pred, F.lit(False))  # NULL predicate = not updated
-    proj = []
-    for c in scols:
-        if c in assignments:
-            v = assignments[c]
-            v = F.expr(v) if isinstance(v, str) else v
-            proj.append(
-                F.when(hit, v.cast(schema[c])).otherwise(F.col(c)).alias(c)
-            )
-        else:
-            proj.append(F.col(c))
-    updated = sdata.select(*proj)
-    if man.get("generated"):
-        updated = _apply_generated(
-            updated, man["generated"], schema, "update_where_snapshot"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(
-            updated, man["constraints"], "update_where_snapshot"
-        )
-    new_files, new_values = _route_rewrite(
-        updated, path, man, token, compression, mapping
-    )
-    manifest = {"files": kept + new_files, "schema": schema}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]  # idempotence watermarks never regress
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_dml_manifest(
-        path, manifest, token, branch, expect_bv,
-        rebase=_make_dml_rebase(
-            man, removed=touched_rels, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
-    )
-    return {
-        "version": version,
-        "rows_updated": rows_updated,
-        "files_rewritten": len(touched_rels),
-        "files_kept": len(kept),
-        "files_probed": len(probe_rels),
-    }
 
 
 def _dv_count(dv_abs: str) -> int:
@@ -3261,7 +3101,7 @@ def purge_deletion_vectors(
     DV deletes (``delete_where_snapshot(..., mode="dv")``) are O(matched
     rows) at write time but tax EVERY subsequent read with the anti-join,
     and the tax grows with vector density. This verb pays the debt down:
-    every data file whose deletion vector covers **more than**
+    every data file whose deletion vector covers **at least**
     ``min_density`` of its rows is rewritten WITHOUT its deleted rows
     (one Spark job for all victims together — purge doubles as
     compaction of the rewritten set) and its sidecar is dropped from the
@@ -3282,18 +3122,12 @@ def purge_deletion_vectors(
     counts deleted rows physically dropped. Prior versions stay
     readable; superseded files and sidecars are reclaimed by
     :func:`vacuum_snapshots`."""
-    import glob
-    import json
     import os
     import uuid
 
     import pyarrow.parquet as pq
 
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    with open(os.path.join(_manifest_dir(path), f"v{versions[-1]}.json")) as f:
-        man = json.load(f)
+    man, head, _ = _dml_head(path, None)
     mapping = man.get("column_mapping") or {}  # scan logical, write physical
     dv_map = man.get("dv") or {}
     victims: list[str] = []
@@ -3306,7 +3140,7 @@ def purge_deletion_vectors(
             rows_materialized += n_del
     if not victims:
         return {
-            "version": versions[-1],
+            "version": head,
             "files_purged": 0,
             "files_kept": len(man["files"]),
             "dvs_kept": len(dv_map),
@@ -3320,37 +3154,15 @@ def purge_deletion_vectors(
     new_files, new_values = _route_rewrite(
         sdata.select(*scols), path, man, token, compression, mapping
     )
-    kept = [rel for rel in man["files"] if rel not in set(victims)]
-    manifest = {"files": kept + new_files, "schema": man["schema"]}
-    if mapping:
-        manifest["column_mapping"] = mapping
-    _carry_partition(man, manifest, new_files, new_values)
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per_file in man["stats"].values() for c in per_file}
-        )
-        stats = {rel: man["stats"][rel] for rel in kept if rel in man["stats"]}
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
-    version = _commit_manifest(
-        path, manifest, token,
-        rebase=_make_dml_rebase(
-            man, removed=victims, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_change(
+        path, man, token, removed=victims, new_files=new_files,
+        new_values=new_values,
     )
     return {
         "version": version,
         "files_purged": len(victims),
-        "files_kept": len(kept),
-        "dvs_kept": len(kept_dv),
+        "files_kept": len(man["files"]) - len(victims),
+        "dvs_kept": len(dv_map) - len(victims),
         "rows_materialized": rows_materialized,
     }
 
@@ -4292,239 +4104,6 @@ def _commit_delta_group(
     return _commit_dml_manifest(
         path, manifest, token, branch, expect_bv, rebase=rebase
     )
-
-
-def _delete_where_mor(
-    spark: SparkSession, path: str, man: dict, predicate,
-    compression: str, prune: tuple | None,
-    partition_where: dict | None = None,
-    point: tuple | None = None,
-    branch: str | None = None, head_id: int | None = None,
-    expect_bv: int | None = None,
-) -> dict:
-    """MOR DELETE as a DELTA-GROUP commit (r12 verdict #1 — the largest
-    interop wall: every DML verb refused on the streaming-CDC substrate,
-    so at 100 TB a delete on a live MOR table meant a full-table
-    compaction first). Tombstone rows (key, seq, op='D') land as one
-    delta group — ZERO base files are rewritten; the resolved read,
-    the change feed and :func:`version_delta` mask/emit them, minor
-    compaction folds them forward still masking, major compaction sheds
-    them. Hudi delete-markers / Delta CDF 'D' semantics; reference: the
-    importer's long-lived upsert loop
-    (handler/incoming_instance_handler.go:285-303) must accept deletes.
-
-    Predicate semantics match the COW delete exactly (NULL = keep);
-    the predicate is evaluated against the RESOLVED view, so a value
-    rewritten by a later delta is judged by its LATEST value.
-    ``prune=(col, lo, hi)`` skips resolving files whose key-column
-    stats can't intersect — sound only when ``col`` is a MOR key column
-    (enforced), the :func:`read_snapshot_pruned` rule. Costs one
-    (pruned) resolve read + O(matched keys) write."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    mor = man["mor"]
-    schema = man["schema"]
-    _check_reserved(schema, (MOR_OP_COL,))
-    key_cols, seq_col = mor["key_cols"], mor["seq_col"]
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-    n_all = len(man["files"]) + sum(len(g) for g in mor["deltas"])
-    read_man, n_kept = man, n_all
-    if partition_where is not None:
-        # r14: partition-tuple probe pruning on a partitioned MOR table
-        # (caller contract: the predicate is FALSE outside the matching
-        # partitions — the COW partition_where contract)
-        read_man, n_kept, _ = _mor_tuple_pruned_manifest(
-            read_man, partition_where, spark
-        )
-    if prune is not None:
-        col, lo, hi = prune
-        if col not in key_cols:
-            raise ValueError(
-                f"MOR delete prune column {col!r} must be a MOR key "
-                f"column {key_cols} — non-key stats can't prune a chain "
-                "soundly (a superseded row would resurrect as winner)"
-            )
-        read_man, n_kept, _ = _mor_pruned_manifest(
-            read_man, {col: (lo, hi)}
-        )
-    if point is not None:
-        # r14: bloom point prune on the chain — key-column-only (the
-        # _bloom_live_rels soundness rule); same caller contract as
-        # the COW point prune (predicate FALSE outside col IN values)
-        read_man, n_kept, _ = _mor_bloom_point_pruned(
-            spark, path, read_man, point[0], list(point[1])
-        )
-    if not read_man["files"] and not any(read_man["mor"]["deltas"]):
-        return {
-            "version": head_id, "rows_deleted": 0,
-            "files_rewritten": 0, "files_kept": len(man["files"]),
-            "files_probed": 0, "delta_files_written": 0,
-        }
-    resolved = _resolve_mor(spark, path, read_man)
-    doomed = resolved.filter(F.coalesce(pred, F.lit(False)))
-    tomb = doomed.select(
-        *key_cols, F.col(seq_col),
-        F.lit(MOR_DELETE_OP).alias(MOR_OP_COL),
-    )
-    token = uuid.uuid4().hex[:12]
-    # routed write: tombstones get real partition tuples on a hidden-
-    # partitioned MOR table (mapping applied physically inside)
-    new_files, new_values = _write_delta_group_routed(
-        tomb, path, man, token, compression
-    )
-    if not new_files:
-        import shutil as _sh
-
-        _sh.rmtree(
-            __import__("os").path.join(path, "data", token),
-            ignore_errors=True,
-        )
-        return {
-            "version": head_id, "rows_deleted": 0,
-            "files_rewritten": 0, "files_kept": len(man["files"]),
-            "files_probed": n_kept, "delta_files_written": 0,
-        }
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    n_rows = sum(
-        _pq.ParquetFile(_os.path.join(path, rel)).metadata.num_rows
-        for rel in new_files
-    )
-    version = _commit_delta_group(
-        path, man, new_files, token, new_values=new_values,
-        branch=branch, expect_bv=expect_bv,
-    )
-    return {
-        "version": version, "rows_deleted": n_rows,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": len(new_files),
-    }
-
-
-def _update_where_mor(
-    spark: SparkSession, path: str, man: dict, assignments: dict,
-    predicate, compression: str, prune: tuple | None,
-    partition_where: dict | None = None,
-    point: tuple | None = None,
-    branch: str | None = None, head_id: int | None = None,
-    expect_bv: int | None = None,
-) -> dict:
-    """MOR UPDATE as a DELTA-GROUP commit (r13, completing the DML triad
-    on the streaming-CDC substrate): matched rows' UPDATED images land
-    as one plain upsert group — they outrank their old rows by commit
-    order, zero base files rewritten. SQL UPDATE semantics match the
-    COW verb (NULL predicate = untouched; every RHS sees PRE-update
-    values). ``prune=(col, lo, hi)`` follows the MOR-delete rule (key
-    columns only). Costs one (pruned) resolve read + O(matched rows)
-    write."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    mor = man["mor"]
-    if mor.get("merge") in ("partial", "aggregate"):
-        raise ValueError(
-            "UPDATE on a partial/aggregate-merge MOR table is not "
-            "supported: a "
-            "full image whose NULL genuinely means NULL would read "
-            "back as 'keep prior value' and resurrect older data — "
-            "send partial upserts (and tombstone deletes), or "
-            "compact_mor (major) to materialize first"
-        )
-    schema = man["schema"]
-    _check_reserved(schema, (MOR_OP_COL,))
-    key_cols, seq_col = mor["key_cols"], mor["seq_col"]
-    bad = [c for c in assignments if c not in schema]
-    if bad:
-        raise ValueError(
-            f"UPDATE assigns non-existent column(s) {bad} — schema "
-            "evolution happens via a write, never an UPDATE"
-        )
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    n_all = len(man["files"]) + sum(len(g) for g in mor["deltas"])
-    read_man, n_kept = man, n_all
-    if partition_where is not None:
-        # r14: partition-tuple probe pruning (see the MOR delete note)
-        read_man, n_kept, _ = _mor_tuple_pruned_manifest(
-            read_man, partition_where, spark
-        )
-    if prune is not None:
-        col, lo, hi = prune
-        if col not in key_cols:
-            raise ValueError(
-                f"MOR update prune column {col!r} must be a MOR key "
-                f"column {key_cols} — non-key stats can't prune a chain "
-                "soundly (a superseded row would resurrect as winner)"
-            )
-        read_man, n_kept, _ = _mor_pruned_manifest(
-            read_man, {col: (lo, hi)}
-        )
-    if point is not None:
-        # r14: bloom point prune on the chain (key-column-only; see the
-        # MOR delete note)
-        read_man, n_kept, _ = _mor_bloom_point_pruned(
-            spark, path, read_man, point[0], list(point[1])
-        )
-    no_op = {
-        "version": head_id, "rows_updated": 0,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": 0,
-    }
-    if not read_man["files"] and not any(read_man["mor"]["deltas"]):
-        return no_op
-    resolved = _resolve_mor(spark, path, read_man)
-    matched = resolved.filter(F.coalesce(pred, F.lit(False)))
-    proj = []
-    for c, t in schema.items():
-        if c in assignments:
-            v = assignments[c]
-            v = F.expr(v) if isinstance(v, str) else v
-            proj.append(v.cast(t).alias(c))
-        else:
-            proj.append(F.col(c))
-    images = matched.select(*proj)
-    if man.get("generated"):
-        images = _apply_generated(
-            images, man["generated"], schema, "update_where_snapshot"
-        )
-    if man.get("constraints"):
-        _enforce_constraints(
-            images, man["constraints"], "update_where_snapshot"
-        )
-    token = uuid.uuid4().hex[:12]
-    new_files, new_values = _write_delta_group_routed(
-        images, path, man, token, compression
-    )
-    if not new_files:
-        import shutil as _sh
-
-        _sh.rmtree(
-            __import__("os").path.join(path, "data", token),
-            ignore_errors=True,
-        )
-        return no_op
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    n_rows = sum(
-        _pq.ParquetFile(_os.path.join(path, rel)).metadata.num_rows
-        for rel in new_files
-    )
-    version = _commit_delta_group(
-        path, man, new_files, token, new_values=new_values,
-        branch=branch, expect_bv=expect_bv,
-    )
-    return {
-        "version": version, "rows_updated": n_rows,
-        "files_rewritten": 0, "files_kept": len(man["files"]),
-        "files_probed": n_kept, "delta_files_written": len(new_files),
-    }
 
 
 def _merge_into_mor(
@@ -5855,17 +5434,7 @@ def write_snapshot_to_branch(
         _carry_partition(prev, manifest, new_files)
     if mapping:
         manifest["column_mapping"] = mapping
-    if prev.get("constraints"):
-        manifest["constraints"] = prev["constraints"]
-    if prev.get("generated"):
-        manifest["generated"] = prev["generated"]
-    if mode == "append":
-        # appended-to branches keep forcing the read schema over the
-        # carried narrow/tombstoned files (branch commits bypass
-        # _commit_manifest's inherit, so carry explicitly here)
-        for carry in ("widened", "dropped"):
-            if prev.get(carry):
-                manifest[carry] = prev[carry]
+    manifest = _inherit_contracts(manifest, prev)
     bdir = _branch_dir(path, name)
     tmp = os.path.join(bdir, f".tmp-{token}.json")
     while True:
@@ -7841,9 +7410,10 @@ def _carry_partition(
     from ``new_values`` (``{rel: [sid, tuple]}`` — the DML rewrite
     routed through the hive writer, r11 verdict #2) or map to None
     (= never pruned) when the rewrite didn't partition-cluster — pruning
-    degrades on that fraction, never lies. Called by the DV / COW
-    delete, UPDATE and MERGE verbs; full-rewrite verbs (optimize,
-    compaction) on unpartitioned tables drop the block instead."""
+    degrades on that fraction, never lies. Called by
+    :func:`_commit_change` (every subset-replacing commit), MERGE and
+    the append paths; full-table rewrites (``write_snapshot``
+    overwrite, ``optimize_snapshot``) start without the block."""
     part = man.get("partition")
     if not part:
         return
@@ -8482,10 +8052,7 @@ def optimize_partitions(
     scale (``None`` restores the one-file-per-tuple fold). Returns
     ``{"version", "files_rewritten", "files_kept",
     "partitions_matched"}``; a no-match call commits nothing."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshots under {path!r}")
-    man = _load_manifest(path, versions[-1])
+    man, head, _ = _dml_head(path, None)
     mapping = man.get("column_mapping") or {}  # scan logical, write physical
     if man.get("mor"):
         # r14 (r13 verdict #4): partition-scoped maintenance on MOR —
@@ -8505,17 +8072,14 @@ def optimize_partitions(
             "compact_small_files_snapshot for unpartitioned layouts"
         )
     spec = part["specs"][part["current"]]
-    matched, total = partition_pruned_files(
-        path, where, versions[-1], spark
-    )
+    matched, total = partition_pruned_files(path, where, head, spark)
     if not matched:
         return {
-            "version": versions[-1],
+            "version": head,
             "files_rewritten": 0,
             "files_kept": total,
             "partitions_matched": 0,
         }
-    kept = [rel for rel in man["files"] if rel not in set(matched)]
     dv_map = man.get("dv") or {}
     # DV-aware scan of the matched files: existing deletes materialize
     # with the rewrite (the vector dies with the file it describes)
@@ -8553,49 +8117,16 @@ def optimize_partitions(
         sdata.select(*scols), path, spec, part["current"], dtypes,
         compression, mapping, max_records_per_file=max_records,
     )
-    values = {
-        rel: v
-        for rel, v in (part.get("values") or {}).items()
-        if rel in set(kept)
-    }
-    values.update(new_values)
-    manifest = {
-        "files": kept + new_files,
-        "schema": man["schema"],
-        "partition": {**{k: part[k] for k in part if k != "values"},
-                      "values": values},
-    }
-    if mapping:
-        manifest["column_mapping"] = mapping
-    kept_dv = {rel: dv_map[rel] for rel in kept if rel in dv_map}
-    if kept_dv:
-        manifest["dv"] = kept_dv
-    if "txn" in man:
-        manifest["txn"] = man["txn"]
-    if "stats" in man:
-        stats_cols = sorted(
-            {c for per in man["stats"].values() for c in per}
-        )
-        stats = {
-            rel: man["stats"][rel] for rel in kept if rel in man["stats"]
-        }
-        stats.update(_stats_logical(new_files, path, stats_cols, mapping))
-        manifest["stats"] = stats
     import uuid
 
-    version = _commit_manifest(
-        path, manifest, uuid.uuid4().hex[:12],
-        rebase=_make_dml_rebase(
-            man, removed=matched, new_files=new_files,
-            new_values=new_values,
-            new_stats=_new_stats_of(manifest, new_files),
-            mapping=mapping,
-        ),
+    version = _commit_change(
+        path, man, uuid.uuid4().hex[:12], removed=matched,
+        new_files=new_files, new_values=new_values,
     )
     return {
         "version": version,
         "files_rewritten": len(matched),
-        "files_kept": len(kept),
+        "files_kept": len(man["files"]) - len(matched),
         "partitions_matched": len(
             {tuple(v[1]) for v in new_values.values()}
         ),
