@@ -128,11 +128,11 @@ _REPRIORITIZE: list[str] = [
     # watermark per-app-max merge — q89b rides it), compact_mor
     # (cluster_by on major), the partition probe prune (now
     # _probe_files/_mor_probe over _partition_keep on the in-hand
-    # manifest), and MERGE/MOR-merge
-    # probe pruning consult bloom sidecars when present. Riders below
-    # already cover the DML/feed families; q89b joins for the ff
-    # change; the r14b-new queries (q68b/q89c/q86g/q86h/q86i) have no
-    # rows and order first regardless. _resolve_mor gained the
+    # manifest), and the MERGE verb's probe pruning (merge_into_snapshot,
+    # CoW and MOR strategies) consults bloom sidecars when present.
+    # Riders below already cover the DML/feed families; q89b joins for
+    # the ff change; the r14b-new queries (q68b/q89c/q86g/q86h/q86i) have
+    # no rows and order first regardless. _resolve_mor gained the
     # partial/aggregate branch (latest path untouched) and the
     # streaming sink folds batches by merge engine — the q86/q87
     # riders below cover both.

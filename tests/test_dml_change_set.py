@@ -8,8 +8,14 @@ partition-scoped OPTIMIZE):
 * each maintenance verb rebases over a racing disjoint append (both
   writers' files live) and refuses a race that removed a file it
   rewrites;
-* the Spark job count of each DELETE/UPDATE write strategy on a small
-  table, so an extra driver round-trip fails deterministically.
+* the Spark job count of each DELETE/UPDATE/MERGE write strategy and of
+  the MOR upsert on a small table, so an extra driver round-trip fails
+  deterministically;
+* a ``txn``-tagged MERGE that writes nothing still records its
+  watermark, so a redelivered batch is skipped;
+* the delta-group rebase gates: a MOR MERGE refuses a racing minor
+  compaction, a same-``txn`` race refuses, and an upsert rebases over a
+  racing minor compaction.
 
 Races reuse the deterministic ``os.link`` interposer of
 ``test_concurrency``.
@@ -262,48 +268,217 @@ def test_maintenance_racing_delete_on_removed_file_refuses(
 
 # -- Spark job count of each row-level DML write strategy --------------------
 
-#: jobs per call on the four-file table below (delete, update); one more
-#: job means one more driver round-trip on every DML commit
+#: jobs per call on the four-file table below; one more job means one more
+#: driver round-trip on every commit of that verb
 _JOBS = {
     ("cow", "delete"): 3,
     ("cow", "update"): 3,
+    ("cow", "merge"): 11,
     ("dv", "delete"): 2,
     ("dv", "update"): 3,
+    ("dv", "merge"): 13,
     ("mor", "delete"): 2,
     ("mor", "update"): 2,
+    ("mor", "merge"): 9,
+    ("mor", "upsert"): 1,
 }
+
+_SEQ_DDL = "k bigint, v double, seq bigint"
+
+
+def _run_verb(spark, path, mode, verb):
+    """Run ``verb`` on keys 10..12; returns the number of rows it changed
+    (a MERGE updates 10 and 12 and inserts 99; an upsert writes 3)."""
+    if verb == "delete":
+        return storage.delete_where_snapshot(
+            spark, path, "k >= 10 AND k < 13", mode=mode
+        )["rows_deleted"]
+    if verb == "update":
+        return storage.update_where_snapshot(
+            spark, path, {"v": "v + 1"}, "k >= 10 AND k < 13", mode=mode,
+        )["rows_updated"]
+    if verb == "merge":
+        storage.merge_into_snapshot(
+            spark, path,
+            _df(spark, [(10, 5.0, 2), (12, 7.0, 2), (99, 9.0, 2)],
+                _SEQ_DDL),
+            ["k"], update_set={"v": "src_v", "seq": "src_seq"},
+        )
+    else:
+        storage.upsert_delta_snapshot(
+            spark, path,
+            _df(spark, [(k, 1.0, 2) for k in (10, 11, 12)], _SEQ_DDL),
+            ["k"], "seq",
+        )
+    return 3
 
 
 @pytest.mark.parametrize("table,verb", sorted(_JOBS))
 def test_row_dml_job_count(spark, table, verb):
     scratch, path = _mkpath()
-    ddl = "k bigint, v double, seq bigint"
     try:
         for i in range(4):  # four single-file commits, k ranges disjoint
             storage.write_snapshot(
                 spark,
                 _df(spark, [(10 * i + j, float(j), 0) for j in range(5)],
-                    ddl).coalesce(1),
+                    _SEQ_DDL).coalesce(1),
                 path, mode="append" if i else "overwrite",
             )
         if table == "mor":
             storage.upsert_delta_snapshot(
-                spark, path, _df(spark, [(31, 9.0, 1)], ddl), ["k"], "seq"
+                spark, path, _df(spark, [(31, 9.0, 1)], _SEQ_DDL), ["k"],
+                "seq",
             )
+        elif table == "dv" and verb == "merge":  # merge a DV-carrying file
+            storage.delete_where_snapshot(spark, path, "k = 11", mode="dv")
         mode = "dv" if table == "dv" else "cow"
+        head = storage.snapshot_versions(path)[-1]
         sc = spark.sparkContext._jsc.sc()
         first = sc.dagScheduler().nextJobId()
-        if verb == "delete":
-            r = storage.delete_where_snapshot(
-                spark, path, "k >= 10 AND k < 13", mode=mode
-            )
-        else:
-            r = storage.update_where_snapshot(
-                spark, path, {"v": "v + 1"}, "k >= 10 AND k < 13",
-                mode=mode,
-            )
+        rows = _run_verb(spark, path, mode, verb)
         jobs = sc.dagScheduler().nextJobId() - first
-        assert r["rows_deleted" if verb == "delete" else "rows_updated"] == 3
+        assert rows == 3
+        assert storage.snapshot_versions(path)[-1] == head + 1
         assert jobs == _JOBS[(table, verb)], jobs
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+# -- MERGE txn watermark ----------------------------------------------------
+
+
+@pytest.mark.parametrize("table", ["cow", "mor"])
+def test_noop_merge_records_txn_watermark(spark, table):
+    """A txn-tagged MERGE that matches and inserts nothing still commits
+    its watermark (as an empty upsert does): a redelivery after another
+    writer added the key is skipped, not re-applied."""
+    scratch, path = _mkpath()
+    try:
+        storage.write_snapshot(
+            spark, _df(spark, [(k, float(k), 0) for k in range(5)],
+                       _SEQ_DDL), path,
+        )
+        if table == "mor":
+            storage.upsert_delta_snapshot(
+                spark, path, _df(spark, [(1, 1.5, 1)], _SEQ_DDL), ["k"],
+                "seq",
+            )
+        src = _df(spark, [(50, 500.0, 9)], _SEQ_DDL)
+
+        def merge():
+            return storage.merge_into_snapshot(
+                spark, path, src, ["k"], update_set={"v": "src_v"},
+                insert=False, txn=("a", 1),
+            )
+
+        v = merge()  # no k=50 yet: matches nothing, inserts nothing
+        assert storage._load_manifest(path, v).get("txn") == {"a": 1}
+        assert _keys(spark, path) == [0, 1, 2, 3, 4]
+        other = _df(spark, [(50, 5.0, 1)], _SEQ_DDL)
+        if table == "mor":
+            storage.upsert_delta_snapshot(spark, path, other, ["k"], "seq")
+        else:
+            storage.write_snapshot(spark, other, path, mode="append")
+        head = storage.snapshot_versions(path)[-1]
+        data = set(os.listdir(os.path.join(path, "data")))
+        assert merge() == head  # the redelivered batch is skipped
+        assert storage.snapshot_versions(path)[-1] == head
+        assert set(os.listdir(os.path.join(path, "data"))) == data
+        got = {
+            r["k"]: r["v"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert got[50] == 5.0
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+# -- delta-group rebase gates -------------------------------------------------
+
+
+def _mor_chain(spark, path):
+    """Base keys 0..9 plus two delta groups (v2: k=1, v3: k=2)."""
+    storage.write_snapshot(
+        spark, _df(spark, [(k, float(k), 0) for k in range(10)], _SEQ_DDL),
+        path,
+    )
+    for k in (1, 2):
+        storage.upsert_delta_snapshot(
+            spark, path, _df(spark, [(k, 10.0 * k, 1)], _SEQ_DDL), ["k"],
+            "seq",
+        )
+
+
+def _minor_compact(spark, path):
+    return lambda: storage.compact_mor(spark, path, minor=True)
+
+
+def test_mor_merge_racing_minor_compaction_refuses(spark, monkeypatch):
+    scratch, path = _mkpath()
+    try:
+        _mor_chain(spark, path)
+        _RaceOnce(monkeypatch, "v4.json", _minor_compact(spark, path))
+        with pytest.raises(
+            storage.ConcurrentCommitError, match="delta chain was rewritten"
+        ):
+            storage.merge_into_snapshot(
+                spark, path, _df(spark, [(3, 33.0, 2)], _SEQ_DDL), ["k"],
+                update_set={"v": "src_v"}, insert=False,
+            )
+        assert storage.snapshot_versions(path)[-1] == 4  # the fold only
+        assert len(storage._load_manifest(path, 4)["mor"]["deltas"]) == 1
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def test_upsert_racing_minor_compaction_both_land(spark, monkeypatch):
+    scratch, path = _mkpath()
+    try:
+        _mor_chain(spark, path)
+        base = _files(path)
+        _RaceOnce(monkeypatch, "v4.json", _minor_compact(spark, path))
+        v = storage.upsert_delta_snapshot(
+            spark, path, _df(spark, [(1, 111.0, 2), (3, 33.0, 1)], _SEQ_DDL),
+            ["k"], "seq",
+        )
+        assert v == 5  # rebased onto the fold's v4
+        man = storage._load_manifest(path, 5)
+        folded = storage._load_manifest(path, 4)["mor"]["deltas"]
+        assert set(man["files"]) == base
+        assert man["mor"]["deltas"][:-1] == folded
+        got = {
+            r["k"]: r["v"]
+            for r in storage.read_snapshot(spark, path).collect()
+        }
+        assert (got[1], got[2], got[3]) == (111.0, 20.0, 33.0)
+        assert len(got) == 10
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+@pytest.mark.parametrize("verb", ["upsert", "merge"])
+def test_mor_same_txn_race_refuses(spark, monkeypatch, verb):
+    scratch, path = _mkpath()
+    try:
+        _mor_chain(spark, path)
+
+        def write(k):
+            rows = _df(spark, [(k, 1.0, 5)], _SEQ_DDL)
+            if verb == "upsert":
+                return storage.upsert_delta_snapshot(
+                    spark, path, rows, ["k"], "seq", txn=("app", 7)
+                )
+            return storage.merge_into_snapshot(
+                spark, path, rows, ["k"], txn=("app", 7),
+                update_set={"v": "src_v", "seq": "src_seq"},
+            )
+
+        _RaceOnce(monkeypatch, "v4.json", lambda: write(100))
+        with pytest.raises(
+            storage.ConcurrentCommitError, match="already committed"
+        ):
+            write(200)
+        assert write(200) == 4  # verb-level retry: the idempotent skip
+        assert _keys(spark, path) == list(range(10)) + [100]
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
